@@ -300,15 +300,18 @@ class HybridEngine:
         self._fwd = (pids[dorder], terms[dorder], tf[dorder],
                      dl[dorder], df[dorder])
 
-    def _apply_interactive_delta(self, changed: DataFrame,
-                                 removed_ids: DataFrame | None,
-                                 fresh_emb: DataFrame | None) -> bool:
+    def _apply_interactive_delta(self, fresh: DataFrame | None,
+                                 removed: set) -> bool:
         """Apply an upsert batch to the RESIDENT interactive tiers in
         place — the O(batch) alternative to `enable_interactive`'s full
-        re-collect. `changed` carries the corpus-schema changed/new rows
-        (removal-wins already applied), `fresh_emb` their embeddings;
-        both are batch-sized checkpointed frames, so the only Spark work
-        here is two O(batch) collects.
+        re-collect. `fresh` is the pinned, batch-sized frame of the
+        corpus-schema changed/new rows (removal-wins already applied)
+        plus their `_embedding`; `removed` the ids the batch deletes.
+        The Spark work here is ONE collect of `fresh` (rows and vectors
+        together) and, when the serving view is live, its lazy
+        delta-merge, whose anti-join broadcasts the batch's id set from
+        a driver-local relation (no re-scan of the batch, no
+        `distinct`).
 
         Per tier: vector matrix/doc map drop the batch's rows and append
         the fresh ones; the lexical tier drops the batch's postings from
@@ -336,28 +339,26 @@ class HybridEngine:
 
         import numpy as np
 
-        if self._mat is None or fresh_emb is None:
+        if self._mat is None or fresh is None:
             return False
         max_rows, max_post = self._interactive_bounds
-        changed_rows = [r.asDict() for r in changed.collect()]
-        removed = ([r[0] for r in removed_ids.collect()]
-                   if removed_ids is not None else [])
-        drop = set(removed) | {r[self.id_col] for r in changed_rows}
+        changed_rows = [r.asDict() for r in fresh.collect()]
+        vectors = [r.pop("_embedding") for r in changed_rows]
+        drop = removed | {r[self.id_col] for r in changed_rows}
         drop_arr = np.array(sorted(drop)) if drop else None
 
         # --- vector tier (bound: total resident vectors) ---------------
         keep = (~np.isin(self._ids, drop_arr) if drop_arr is not None
                 else np.ones(len(self._ids), dtype=bool))
-        fresh_rows = fresh_emb.collect()
-        if int(keep.sum()) + len(fresh_rows) > max_rows:
+        if int(keep.sum()) + len(changed_rows) > max_rows:
             return False
         ids2, mat2 = self._ids[keep], self._mat[keep]
-        if fresh_rows:
+        if changed_rows:
             ids2 = np.concatenate(
-                [ids2, np.array([r[0] for r in fresh_rows])])
+                [ids2, np.array([r[self.id_col] for r in changed_rows])])
             mat2 = np.vstack(
                 [mat2.reshape(-1, self._mat.shape[1]),
-                 np.array([list(r[1]) for r in fresh_rows])])
+                 np.array([list(v) for v in vectors])])
 
         # --- doc-map tier (bound: corpus rows; degrades alone) ---------
         new_map = None
@@ -412,17 +413,12 @@ class HybridEngine:
 
         # --- serving corpus view: lazy delta-merge --------------------
         if self._docs_view is not None and self._docs_serving is not None:
-            batch_ids = changed.select(self.id_col)
-            if removed_ids is not None:
-                batch_ids = batch_ids.unionByName(
-                    removed_ids.select(F.col(removed_ids.columns[0])
-                                       .alias(self.id_col)))
             n_parts = max(1, len(ids2) // 250_000 + 1)
             self._docs_serving = (
                 self._docs_serving
-                .join(F.broadcast(batch_ids.distinct()), self.id_col,
+                .join(F.broadcast(self._ids_df(drop)), self.id_col,
                       "left_anti")
-                .unionByName(changed.select(self.id_col, self.text_col))
+                .unionByName(fresh.select(self.id_col, self.text_col))
                 .coalesce(n_parts)
                 # lazy: materializes (and flattens) only if the SQL tail
                 # actually reads it — repeated upserts before first use
@@ -1854,60 +1850,85 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         A batch that grows the corpus past those bounds RELEASES the
         interactive tiers (Spark paths take over; `interactive_enabled`
         tells you which side you're on) rather than serving a stale
-        snapshot. `incoming` must carry the corpus schema. Cost tracks the CHANGED set on every Spark-side tier;
-        the driver-resident tiers re-collect (they are bounded by
-        definition). Returns reference-shaped counts
-        {processed, inserted, updated, skipped, removed}."""
+        snapshot. `incoming` must carry the corpus schema and each id at
+        most once: a repeated id raises ValueError before any tier
+        changes. Returns reference-shaped counts
+        {processed, inserted, updated, skipped, removed}.
+
+        Cost: `incoming` is evaluated ONCE — it is pinned, and one
+        collect of its ids fills the pin; `removed_ids` is read once.
+        One broadcast semi-join over the corpus fetches the stored
+        checksums of the batch's and the removal's ids, and one collect
+        of the classified (id, action) projection yields the counts and
+        the changed-id set. Those id sets are held as driver-local
+        relations, so every join of the batch against a corpus-sized
+        tier is a broadcast join that needs no shuffle and re-reads no
+        batch frame; the MERGE anti-join broadcasts the pinned batch.
+        The corpus-sized work left is scans: the checksum lookup, the
+        MERGE, the eager re-pins of the merged documents, embeddings and
+        lexical doc lengths, and the lazy re-pins of the other lexical
+        index frames (each coalesced to its old partition count, so
+        chained upserts keep a flat task count). Driver memory: the id sets are the
+        same bytes the broadcasts collect to the driver anyway; the
+        driver-resident tiers delta-apply in place (bounded by
+        definition)."""
+        from collections import Counter
+
         from .sources.ingest import (
             classify_changes,
             merge_upsert,
             row_checksum,
         )
 
-        ck = row_checksum(self.id_col, self.text_col)
-        classified = classify_changes(
-            incoming.withColumn("_ck", ck),
-            self.docs.withColumn("_ck", ck),
-            key=self.id_col, checksum="_ck").localCheckpoint()
-        n_incoming = classified.count()
-        n_removed = 0
-        if removed_ids is not None:
-            removed_ids = (removed_ids
-                           .select(F.col(removed_ids.columns[0])
-                                   .alias(self.id_col))
-                           .join(self.docs.select(self.id_col), self.id_col,
-                                 "left_semi").localCheckpoint())
-            n_removed = removed_ids.count()
+        key = self.id_col
+        # the lazy pin fills inside the id collect: the caller's frame is
+        # evaluated exactly once, every later use scans the pin
+        batch = (incoming.select(*self.docs.columns)
+                 .localCheckpoint(eager=False))
+        batch_ids = [r[0] for r in batch.select(key).collect()]
+        repeated = [i for i, n in Counter(batch_ids).items() if n > 1]
+        if repeated:
+            raise ValueError(
+                f"upsert batch repeats {key} values {repeated[:10]}")
+        removed = ({r[0] for r in
+                    removed_ids.select(removed_ids.columns[0]).collect()}
+                   if removed_ids is not None else set())
+
+        # stored checksums of the batch's and the removal's ids: one
+        # corpus scan filtered by a broadcast of the driver's id set
+        ck = row_checksum(key, self.text_col)
+        present = (self.docs
+                   .join(F.broadcast(self._ids_df(set(batch_ids)
+                                                  | removed)),
+                         key, "left_semi")
+                   .select(key, ck.alias("_ck")).collect())
+        id_type = self.docs.schema[key].dataType.simpleString()
+        existing = local_df(self.spark, [tuple(r) for r in present],
+                            f"`{key}` {id_type}, `_ck` string")
+        actions = dict(classify_changes(
+            batch.withColumn("_ck", ck), existing,
+            key=key, checksum="_ck").select(key, "action").collect())
         # Counts report what actually happened to each tier: a doc in both
         # incoming and removed_ids is dropped everywhere (removal wins), so
         # it counts ONLY as removed; under force the checksum-unchanged
         # rows are genuinely reprocessed, so they count as updated, not
         # skipped. `processed` stays the full incoming batch size.
-        stats_src = classified
-        if removed_ids is not None:
-            stats_src = stats_src.join(removed_ids, self.id_col, "left_anti")
-        st = stats_src.agg(
-            F.sum(F.when(F.col("action") == "insert", 1).otherwise(0))
-            .alias("ins"),
-            F.sum(F.when(F.col("action") == "update", 1).otherwise(0))
-            .alias("upd"),
-            F.sum(F.when(F.col("action") == "skip", 1).otherwise(0))
-            .alias("skp"),
-        ).first()
-        changed = (classified if force
-                   else classified.filter(F.col("action") != "skip"))
-        changed = changed.drop("action", "_ck")
-        if removed_ids is not None:
-            # Removal wins over a same-batch update: a doc in both sets
-            # must NOT be reinserted into any tier.
-            changed = changed.join(removed_ids, self.id_col, "left_anti")
-        changed = changed.localCheckpoint()
+        stored = {r[0] for r in present}
+        gone = removed & stored
+        counts = Counter(a for i, a in actions.items() if i not in gone)
+        changed_ids = {i for i, a in actions.items()
+                       if i not in gone and (force or a != "skip")}
+        changed = batch.join(F.broadcast(self._ids_df(changed_ids)),
+                             key, "left_semi")
+        gone_df = self._ids_df(gone) if gone else None
 
-        merged = merge_upsert(self.docs, incoming.select(*self.docs.columns),
-                              key=self.id_col)
-        if removed_ids is not None:
-            merged = merged.join(removed_ids, self.id_col, "left_anti")
-        self.docs = merged.localCheckpoint()
+        # the pin carries no size stats, so without the hint the MERGE
+        # anti-join would sort-merge (shuffle) the whole corpus
+        merged = merge_upsert(self.docs, F.broadcast(batch), key=key)
+        if gone_df is not None:
+            merged = merged.join(F.broadcast(gone_df), key, "left_anti")
+        self.docs = (merged.coalesce(self.docs.rdd.getNumPartitions())
+                     .localCheckpoint())
         # The narrator-field index (and its driver tier) is derived from
         # self.docs — invalidate so the next narrator leg rebuilds against
         # the merged corpus instead of serving the pre-upsert snapshot
@@ -1917,20 +1938,22 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
 
         if self._index is not None:
             self._index = bm25.refresh_index(
-                self._index, changed, removed_ids,
-                text_col=self.text_col, id_col=self.id_col)
+                self._index, changed, gone_df,
+                text_col=self.text_col, id_col=key)
         fresh = None
         if self._emb is not None:
-            drop = changed.select(self.id_col)
-            if removed_ids is not None:
-                drop = drop.unionByName(removed_ids)
-            kept = self._emb.join(F.broadcast(drop.distinct()),
-                                  self.id_col, "left_anti")
-            fresh = changed.select(
-                F.col(self.id_col),
-                embed_column(F.col(self.text_col), self.dim)
-                .alias("embedding")).localCheckpoint()
-            self._emb = kept.unionByName(fresh).localCheckpoint()
+            kept = self._emb.join(
+                F.broadcast(self._ids_df(changed_ids | gone)),
+                key, "left_anti")
+            # changed rows and their vectors in ONE pin: the resident
+            # tiers read both from a single collect
+            fresh = changed.withColumn(
+                "_embedding",
+                embed_column(F.col(self.text_col), self.dim)).localCheckpoint()
+            self._emb = (kept.unionByName(
+                fresh.select(key, F.col("_embedding").alias("embedding")))
+                .coalesce(self._emb.rdd.getNumPartitions())
+                .localCheckpoint())
         if self._interactive_bounds is not None:
             # Interactive was requested at some point. With tiers resident
             # the batch delta-applies IN PLACE (O(batch) work — no
@@ -1943,14 +1966,21 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             # re-enables. Check `interactive_enabled` after bulk loads to
             # see which side you're on.
             if not (self.interactive_enabled
-                    and self._apply_interactive_delta(changed, removed_ids,
-                                                      fresh)):
+                    and self._apply_interactive_delta(fresh, gone)):
                 self.enable_interactive(*self._interactive_bounds)
-        ins, upd, skp = int(st.ins or 0), int(st.upd or 0), int(st.skp or 0)
+        upd, skp = counts["update"], counts["skip"]
         if force:
             upd, skp = upd + skp, 0
-        return {"processed": n_incoming, "inserted": ins, "updated": upd,
-                "skipped": skp, "removed": n_removed}
+        return {"processed": len(batch_ids), "inserted": counts["insert"],
+                "updated": upd, "skipped": skp, "removed": len(gone)}
+
+    def _ids_df(self, ids) -> DataFrame:
+        """Corpus ids as a one-column LocalRelation: exact size stats,
+        and its broadcast ships the driver's rows instead of re-reading
+        a frame."""
+        t = self.docs.schema[self.id_col].dataType.simpleString()
+        return local_df(self.spark, [(i,) for i in ids],
+                        f"`{self.id_col}` {t}")
 
     def get_document(self, doc_id) -> DataFrame:
         """Q7 point lookup with a head snippet. With the interactive doc

@@ -10,9 +10,10 @@ layer has dodged this for rounds with SQL VALUES literals
 (`api.HybridEngine._fused_literal_df`); this module is the same fix for
 the plan layer's many small driver-side relations (query batches, probe
 tables, codebooks, hyperplanes): hand Spark a pyarrow Table, which lands
-as a JVM LocalRelation — no Python workers at action time, broadcast
-builds driver-side with no job (guide §4: keep the JVM↔Python boundary
-out of the query path).
+as a JVM LocalRelation — no Python workers at action time, exact size
+stats for the planner, and a broadcast is one small JVM-only job over
+the driver's rows (guide §4: keep the JVM↔Python boundary out of the
+query path).
 """
 
 from __future__ import annotations

@@ -67,6 +67,10 @@ class LexicalIndex:
     # pinned frames have no partition dirs to prune). Same 5-col schema
     # as scoring_view().
     prune: object | None = None
+    # terms whose df or scoring rows could differ from the base index
+    # (set by refresh_index: the vocabulary of its dropped and fresh
+    # docs); sources.index_store rewrites only their term buckets
+    moved_terms: frozenset | None = None
 
     def cache(self) -> "LexicalIndex":
         self.postings.cache()
@@ -205,30 +209,44 @@ def refresh_index(index: LexicalIndex, changed_docs: DataFrame,
     corpus-sized frame is touched only through a broadcast anti-join of
     the (small) changed-ID set against the PINNED base frames, and every
     rebuild is narrow over the changed docs — cost tracks the batch,
-    never the corpus. Returns a NEW LexicalIndex; the base is untouched
-    (snapshot semantics — readers of the old index keep a consistent
-    view, exactly like a Delta/Iceberg MERGE writing a new version).
+    never the corpus. The batch's key sets (dropped doc ids, moved
+    terms and their new df) are collected once and held as driver-local
+    relations (`localrel.local_df`): every join broadcasts them, and a
+    broadcast collects its build side to the driver anyway, so the
+    driver holds the same bytes as before — but a LocalRelation needs
+    no `distinct` shuffle, and its broadcast is one small job over the
+    driver's rows instead of a re-scan of the batch. The driver-side
+    sets are bounded by the batch: its doc ids plus the vocabulary of
+    its dropped and fresh docs. Returns a NEW LexicalIndex; the base is
+    untouched (snapshot semantics — readers of the old index keep a
+    consistent view, exactly like a Delta/Iceberg MERGE writing a new
+    version).
 
     The genuinely non-local parts of a lexical index are the GLOBAL
     statistics BM25 bakes into every score, and they are delta-merged,
     not rebuilt:
     - `term_df`: df changes only for terms appearing in dropped or
-      reinserted docs. Both sides of the delta aggregate tiny frames
-      (removed terms come from a left-semi slice of pinned postings,
-      added terms from the fresh postings), and the net-zero rows —
-      an updated doc that keeps a term — are filtered out before the
-      merge, so unchanged vocabulary rows pass through an anti-join
-      untouched.
+      reinserted docs. The per-term net move aggregates tiny frames
+      (-1 per posting in a left-semi slice of the pinned postings, +1
+      per fresh posting) and is collected in one job; a second job
+      reads those terms' current df from a broadcast semi-join over
+      term_df. The new df of every moved term is computed on the
+      driver, and the rest of the vocabulary passes through an
+      anti-join untouched.
     - `stats` (n_docs, avgdl): recomputed with build_index's exact
       aggregation over the merged doc_len — a scan of the narrow
       (doc_id, dl) table, not the corpus text. dl/tf are integer-valued
       doubles so the sums are exact and the result is bit-identical to
       a from-scratch build.
     - the denormalized `scoring_view` (if the base materialized one) is
-      delta-merged too: rows of dropped/changed docs are replaced, rows
-      of UNCHANGED docs are rebuilt only where the term's df actually
-      changed (dl can't have changed for an untouched doc), everything
-      else is kept verbatim.
+      delta-merged too: rows of dropped/changed docs are replaced by the
+      fresh rows, rows of UNCHANGED docs keep tf and dl (dl can't have
+      changed for an untouched doc) and take the new df through a
+      broadcast left join on the moved terms.
+
+    Each pinned frame is coalesced to its base's partition count, so a
+    chain of refreshes keeps a flat task count instead of adding the
+    batch's partitions to every later scan.
 
     At 100 TB: postings are bucketed by `term` for query pruning, so the
     doc-keyed delete is a full-scan broadcast anti-join (no shuffle) —
@@ -238,124 +256,123 @@ def refresh_index(index: LexicalIndex, changed_docs: DataFrame,
     `incremental_postings_refresh` oracle query and
     `test_refresh_index_equals_rebuild`.
 
-    `pin=True` pins LAZILY (`localCheckpoint(eager=False)`): the
-    snapshot is taken at the FIRST downstream action, not at this call
-    (round-13 ADVICE) — evaluate the returned index (any action over it)
-    BEFORE mutating or deleting the `changed_docs` source; an eager pin
+    `pin=True` pins LAZILY (`localCheckpoint(eager=False)`): the key
+    sets above are read at this call, but the snapshot frames are taken
+    at the FIRST downstream action (round-13 ADVICE) — evaluate the
+    returned index (any action over it) BEFORE mutating or deleting the `changed_docs` source; an eager pin
     captured the batch immediately, the lazy pin reads whatever the
     source holds at first evaluation. Every in-repo caller (streaming
     foreachBatch loops, the CLI delta) evaluates within the batch's
     validity window."""
-    changed_ids = (changed_docs.select(F.col(id_col).alias("doc_id"))
-                   .distinct())
-    drop = changed_ids
+    spark = changed_docs.sparkSession
+    id_type = index.postings.schema["doc_id"].dataType.simpleString()
+    id_ddl = f"doc_id {id_type}"
+    # The batch's key sets live on the driver as LocalRelations: every
+    # join below broadcasts them (which collected them to the driver
+    # anyway), and a LocalRelation needs no `distinct` shuffle and no
+    # re-scan of the batch to broadcast.
+    drop_ids = {r[0] for r in changed_docs.select(id_col).collect()}
     if removed_ids is not None:
-        drop = (drop.unionByName(
-            removed_ids.select(F.col(removed_ids.columns[0]).alias("doc_id")))
-            .distinct())
+        drop_ids.update(r[0] for r in
+                        removed_ids.select(removed_ids.columns[0]).collect())
+    drop = local_df(spark, [(i,) for i in drop_ids], id_ddl)
 
     # Reinsert side: a narrow build_index over just the changed docs.
-    fresh_post = (doc_tokens(changed_docs, text_col, id_col)
-                  .groupBy("doc_id", "term")
-                  .agg(F.count(F.lit(1)).cast("double").alias("tf")))
+    # Each fresh posting carries its doc's length (token count == sum of
+    # the doc's tfs), so the scoring-view rebuild below needs no
+    # doc-keyed join.
+    toks = changed_docs.select(F.col(id_col).alias("doc_id"),
+                               tokenize(F.col(text_col)).alias("_toks"))
+    n_toks = F.size("_toks").cast("double").alias("dl")
+    fresh = (toks.select("doc_id", n_toks, F.explode("_toks").alias("term"))
+             .groupBy("doc_id", "term", "dl")
+             .agg(F.count(F.lit(1)).cast("double").alias("tf")))
     if pin:
-        # lazy: pins at first evaluation (the delta pin's job), same
-        # exactly-once semantics, one less driver job per refresh (§1.2)
-        fresh_post = fresh_post.localCheckpoint(eager=False)
-    fresh_dl = fresh_post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+        # lazy: pins at first evaluation (the net-move collect's job)
+        fresh = fresh.localCheckpoint(eager=False)
+    fresh_post = fresh.select("doc_id", "term", "tf")
+    # token-less docs have no index presence (size is -1 or NULL on NULL)
+    fresh_dl = toks.select("doc_id", n_toks).filter(F.col("dl") > 0.0)
 
-    # Delete + reinsert on the doc-keyed frames.
+    # Net df move per term: -1 per dropped doc holding it, +1 per fresh
+    # doc. ONE batch-sized aggregation; its rows cover every term whose
+    # df or scoring rows the batch can touch (net-zero terms included:
+    # the fresh docs' scoring rows need their df too).
+    net = dict(index.postings
+               .join(F.broadcast(drop), "doc_id", "left_semi")
+               .select("term", F.lit(-1.0).alias("_n"))
+               .unionByName(fresh_post.select("term", F.lit(1.0).alias("_n")))
+               .groupBy("term").agg(F.sum("_n")).collect())
+    moved = local_df(spark, [(t,) for t in net], "term string")
+    old_df = dict(index.term_df.join(F.broadcast(moved), "term", "left_semi")
+                  .collect())
+    new_df = {t: old_df.get(t, 0.0) + n for t, n in net.items()}
+    touched = local_df(spark, [(t, d) for t, d in new_df.items() if d > 0.0],
+                       "term string, df double")
+
+    # Delete + reinsert on the doc-keyed frames; moved terms' df rows are
+    # replaced by their recomputed values, the rest of the vocabulary
+    # passes through untouched.
     new_post = (index.postings.join(F.broadcast(drop), "doc_id", "left_anti")
                 .unionByName(fresh_post))
     new_dl = (index.doc_len.join(F.broadcast(drop), "doc_id", "left_anti")
               .unionByName(fresh_dl))
-
-    # term_df delta: net df change per term, dropped net-zero rows.
-    removed_tf = (index.postings
-                  .join(F.broadcast(drop), "doc_id", "left_semi")
-                  .groupBy("term")
-                  .agg(F.count(F.lit(1)).cast("double").alias("_rm")))
-    added_tf = (fresh_post.groupBy("term")
-                .agg(F.count(F.lit(1)).cast("double").alias("_add")))
-    delta = (removed_tf.join(added_tf, "term", "full_outer")
-             .select("term",
-                     (F.coalesce(F.col("_add"), F.lit(0.0))
-                      - F.coalesce(F.col("_rm"), F.lit(0.0))).alias("_net"))
-             .filter(F.col("_net") != 0.0))
-    if pin:
-        delta = delta.localCheckpoint(eager=False)
-    # Existing vocabulary: left join the broadcast delta (full outer can't
-    # broadcast); brand-new terms arrive via the anti-join leg.
-    updated_df = (index.term_df.join(F.broadcast(delta), "term", "left")
-                  .select("term", (F.col("df")
-                                   + F.coalesce(F.col("_net"), F.lit(0.0)))
-                          .alias("df"))
-                  .filter(F.col("df") > 0.0))
-    new_terms = (delta.join(index.term_df, "term", "left_anti")
-                 .filter(F.col("_net") > 0.0)
-                 .select("term", F.col("_net").alias("df")))
-    new_term_df = updated_df.unionByName(new_terms)
+    new_term_df = (index.term_df.join(F.broadcast(moved), "term", "left_anti")
+                   .unionByName(touched))
 
     if pin:
         # Truncate lineage so CHAINED refreshes (repeated upsert batches,
         # streaming per-micro-batch maintenance) stay O(1) plan depth: an
         # unpinned result would make the next refresh's base a lazy
         # anti-join/union tower replaying every earlier batch. Lazy
-        # checkpoints (eager=False) pin at first evaluation — a refresh
-        # whose output is never read costs nothing extra; the next
-        # batch's (or the final consumer's) first action materializes
-        # and pins all three. When the base carries a scoring view, the
-        # postings pin is skipped here and derived from the scoring pin
-        # below instead (same rows, one materialization).
+        # checkpoints (eager=False) pin at first evaluation — frames
+        # that are never read cost nothing beyond the collects above;
+        # the next batch's (or the final consumer's) first action
+        # materializes and pins them. When the base carries a scoring
+        # view, the postings pin is skipped here and derived from the
+        # scoring pin below instead (same rows, one materialization).
         if index._scoring is None:
-            new_post = new_post.localCheckpoint(eager=False)
-        new_dl = new_dl.localCheckpoint(eager=False)
-        new_term_df = new_term_df.localCheckpoint(eager=False)
+            new_post = _pin_like(new_post, index.postings)
+        # eager: no later refresh reads doc_len, so a lazy pin would stack
+        # every chained batch into one lineage until the first stats read
+        new_dl = _pin_like(new_dl, index.doc_len, eager=True)
+        new_term_df = _pin_like(new_term_df, index.term_df)
 
     new_stats = new_dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
     out = LexicalIndex(postings=new_post, doc_len=new_dl, stats=new_stats,
-                       term_df=new_term_df)
+                       term_df=new_term_df, moved_terms=frozenset(net))
 
     if index._scoring is not None:
-        # Scoring-view delta: replace rows of dropped/changed docs and of
-        # terms whose df moved; keep the rest verbatim. The two rebuild
-        # legs are disjoint by construction (second leg anti-joins the
-        # changed docs away).
-        changed_terms = delta.select("term")
+        # Scoring-view delta: rows of dropped/changed docs are replaced by
+        # the fresh docs' rows; every other row keeps its tf and dl (an
+        # untouched doc's length can't change) and takes its term's new
+        # df. A surviving row's term has new df >= 1, so every moved term
+        # it can carry is in `touched`.
         kept_sc = (index._scoring
                    .join(F.broadcast(drop), "doc_id", "left_anti")
-                   .join(F.broadcast(changed_terms), "term", "left_anti"))
-        rebuild_post = (fresh_post
-                        .unionByName(new_post
-                                     .join(F.broadcast(changed_ids),
-                                           "doc_id", "left_anti")
-                                     .join(F.broadcast(changed_terms),
-                                           "term", "left_semi")))
-        rebuilt_sc = (rebuild_post
-                      .join(new_dl, "doc_id")
-                      .join(new_term_df, "term")
+                   .join(F.broadcast(touched.withColumnRenamed("df", "_df")),
+                         "term", "left")
+                   .select("doc_id", "term", "tf", "dl",
+                           F.coalesce(F.col("_df"), F.col("df")).alias("df")))
+        rebuilt_sc = (fresh.join(F.broadcast(touched), "term")
                       .select("doc_id", "term", "tf", "dl", "df"))
         sc = kept_sc.unionByName(rebuilt_sc)
-        # lazy, like the three base frames above: a CHAINED refresh
+        # lazy, like term_df above: a CHAINED refresh
         # (streaming per-micro-batch maintenance) materializes batch N's
         # view inside batch N+1's delta job instead of as its own —
         # identical total work, strictly fewer driver jobs; the final
         # consumer's scoring_view() call materializes the last snapshot.
-        out._scoring = sc.localCheckpoint(eager=False) if pin else sc
+        out._scoring = _pin_like(sc, index._scoring) if pin else sc
         if pin:
             # The scoring view holds EXACTLY the postings rows with dl/df
-            # denormalized on (kept_sc covers unchanged-doc/unchanged-term
-            # rows, the rebuild legs cover the rest, disjointly — the same
-            # partition of new_post's rows), so the postings snapshot can
-            # be a projection of the scoring pin instead of its own
-            # checkpoint: one materialization pass and one set of pinned
-            # blocks per refresh where there were two (§1.2). new_post
-            # stays the unpinned expression feeding the rebuild leg above
-            # (evaluated once, inside the scoring pin's materialization —
-            # its inputs are the PREVIOUS snapshot's pinned blocks).
+            # denormalized on (kept_sc covers the surviving docs' rows,
+            # rebuilt_sc the fresh docs', disjointly), so the postings
+            # snapshot can be a projection of the scoring pin instead of
+            # its own checkpoint: one materialization pass and one set of
+            # pinned blocks per refresh where there were two (§1.2).
             out.postings = out._scoring.select("doc_id", "term", "tf")
 
     if index._doc_norm is not None:
@@ -365,14 +382,25 @@ def refresh_index(index: LexicalIndex, changed_docs: DataFrame,
         # set plus docs containing a df-shifted term. Whether the delta
         # path is valid (n_docs preserved) is decided lazily at first
         # doc_norm() call — see LexicalIndex.doc_norm.
+        shifted = local_df(spark, [(t,) for t, n in net.items() if n != 0.0],
+                           "term string")
         affected = (drop.unionByName(
-            out.postings.join(F.broadcast(delta.select("term")),
-                              "term", "left_semi")
+            out.postings.join(F.broadcast(shifted), "term", "left_semi")
             .select("doc_id"))
             .distinct())
         out._norm_base = (index._doc_norm, index.stats_literals()[0],
                           affected)
     return out
+
+
+def _pin_like(df: DataFrame, base: DataFrame,
+              eager: bool = False) -> DataFrame:
+    """Pin a refreshed frame at its base's partition count. A refresh
+    unions the base's partitions with the batch's; without the coalesce
+    each chained refresh would add the batch's partitions to every later
+    scan of the frame."""
+    n = max(1, base.rdd.getNumPartitions())
+    return df.coalesce(n).localCheckpoint(eager=eager)
 
 
 def _bm25_term_score(tf: Column, dl: Column, avgdl: Column, df: Column, n: Column,

@@ -263,20 +263,8 @@ def write_refresh(spark: SparkSession, index_dir: str,
     n_buckets = read_layout(index_dir)
     refreshed = bm25.refresh_index(base, changed_docs, removed_ids,
                                    text_col=text_col, id_col=id_col)
-
-    drop = changed_docs.select(F.col(id_col).alias("doc_id")).distinct()
-    if removed_ids is not None:
-        drop = drop.unionByName(
-            removed_ids.select(F.col(removed_ids.columns[0])
-                               .alias("doc_id"))).distinct()
-    touched_terms = (base.postings
-                     .join(F.broadcast(drop), "doc_id", "left_semi")
-                     .select("term")
-                     .unionByName(bm25.doc_tokens(changed_docs, text_col,
-                                                  id_col).select("term"))
-                     .distinct())
-    touched = sorted({bucket_of(r.term, n_buckets)
-                      for r in touched_terms.collect()})
+    touched = sorted({bucket_of(t, n_buckets)
+                      for t in refreshed.moved_terms})
 
     # STAGE: all writes land under .refresh-staging while the live tree
     # (which the refreshed plans lazily read) stays untouched — no

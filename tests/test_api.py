@@ -536,6 +536,87 @@ def test_upsert_counts_removal_wins_and_force(spark):
                    "skipped": 0, "removed": 0}
 
 
+def test_upsert_rejects_repeated_ids_before_any_tier_changes(spark):
+    """Two rows for one id in a batch are ambiguous (which text wins?):
+    the upsert must refuse with ValueError naming the id, and leave the
+    corpus and the lexical index exactly as they were."""
+    docs = spark.createDataFrame([(1, "alpha beta"), (2, "gamma delta")],
+                                 "doc_id int, text string")
+    eng = HybridEngine(spark, docs)
+    idx = eng.index
+    incoming = spark.createDataFrame(
+        [(1, "first rewrite"), (1, "second rewrite"), (5, "new doc")],
+        "doc_id int, text string")
+    with pytest.raises(ValueError, match=r"doc_id values \[1\]"):
+        eng.upsert_documents(incoming)
+    assert sorted(tuple(r) for r in eng.docs.collect()) == [
+        (1, "alpha beta"), (2, "gamma delta")]
+    assert eng._index is idx
+    assert eng.fts_match(terms=["first"]).collect() == []
+
+
+def test_upsert_small_batch_resident_reads_batch_once(spark):
+    """A mixed batch (update, insert, unchanged re-arrival, removal —
+    one doc both updated and removed) against live resident tiers:
+    reference-shaped counts, resident rows equal the Spark path over the
+    refreshed Spark-side tiers, the caller's frame is evaluated exactly
+    once, and no refreshed frame gains partitions."""
+    from pyspark.sql.types import StringType
+
+    rows = [(i, f"doc {i} about patience and prayer marker{i}")
+            for i in range(1, 9)]
+    eng = HybridEngine(spark, spark.createDataFrame(
+        rows, "doc_id int, text string"))
+    assert eng.enable_interactive()
+    assert eng._index._scoring is not None and eng._emb is not None
+
+    def parts():
+        idx = eng._index
+        return {"docs": eng.docs.rdd.getNumPartitions(),
+                "emb": eng._emb.rdd.getNumPartitions(),
+                **{n: getattr(idx, n).rdd.getNumPartitions()
+                   for n in ("doc_len", "term_df", "_scoring")}}
+
+    before = parts()
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(text):
+        reads.add(1)
+        return text
+
+    batch = [(1, "doc 1 rewritten about charity and fasting"),  # update
+             (2, rows[1][1]),                                   # skip
+             (3, "doc 3 rewritten but removed"),          # removal wins
+             (20, "brand new doc about charity")]              # insert
+    incoming = (spark.createDataFrame(batch, "doc_id int, text string")
+                .withColumn("text", F.udf(counted, StringType())("text")))
+    removed = spark.createDataFrame([(3,), (4,), (99,)], "doc_id int")
+    st = eng.upsert_documents(incoming, removed)
+    assert st == {"processed": 4, "inserted": 1, "updated": 1,
+                  "skipped": 1, "removed": 2}
+    assert reads.value == len(batch)
+    assert eng.interactive_enabled and eng._lex is not None
+    assert parts() == before
+
+    def snapshot():
+        return {
+            "hybrid": [[r.asDict() for r in
+                        eng.hybrid_search(q, n_results=5).collect()]
+                       for q in ("patience and prayer", "charity fasting")],
+            "fts": [r.asDict() for r in
+                    eng.fts_match(terms=["charity"], k=10).collect()],
+            "mlt": [r.asDict() for r in
+                    eng.more_like_this(1, n_results=5).collect()],
+            "docs": [eng.get_document_row(i) for i in (1, 2, 3, 4, 20)],
+        }
+
+    resident = snapshot()
+    assert resident["docs"][2] is None and resident["docs"][3] is None
+    assert resident["docs"][4]["text"] == "brand new doc about charity"
+    eng.disable_interactive()
+    assert snapshot() == resident
+
+
 def test_get_document_null_text_tier_identity(spark):
     """NULL-text rows must render identically (NULL preview) from the
     zero-job doc map and the Spark filter path."""

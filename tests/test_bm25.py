@@ -280,14 +280,23 @@ def test_refresh_index_chained_plans_stay_flat(spark):
     refreshed frame is (lazily) checkpointed, so the NEXT refresh's base
     plans are flat LogicalRDD scans — O(1) plan depth per batch, the
     property that makes per-micro-batch / repeated-upsert maintenance
-    viable (an unpinned chain replays every earlier batch on each use)."""
+    viable (an unpinned chain replays every earlier batch on each use).
+    Each refreshed frame also keeps its base's partition count, so the
+    task count of every later scan stays flat too."""
     docs = spark.createDataFrame(REFRESH_CORPUS, "doc_id long, text string")
     idx = bm25.build_index(docs)
     idx.scoring_view()
+
+    def parts(ix):
+        return {n: getattr(ix, n).rdd.getNumPartitions()
+                for n in ("postings", "doc_len", "term_df", "_scoring")}
+
+    base_parts = parts(idx)
     for i in range(3):
         changed = spark.createDataFrame([(100 + i, f"chained doc {i} data")],
                                         "doc_id long, text string")
         idx = bm25.refresh_index(idx, changed)
+        assert parts(idx) == base_parts, i
     for name in ("postings", "doc_len", "term_df"):
         plan = getattr(idx, name)._jdf.queryExecution().analyzed().toString()
         assert "Union" not in plan and "Join" not in plan, (name, plan)

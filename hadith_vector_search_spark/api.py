@@ -106,7 +106,6 @@ class HybridEngine:
         self._fwd = None   # doc-sorted forward arrays (interactive mode)
         self._doc_rows = None   # id -> row dict (interactive mode)
         self._lex_vocab = None  # sorted vocab keys of _lex
-        self._docs_view = None  # serving temp view name (interactive mode)
         self._interactive_bounds = None  # set once enable_interactive runs
 
     def enable_interactive(self, max_driver_rows: int = 500_000,
@@ -118,8 +117,11 @@ class HybridEngine:
         architecture (quran_mcp/search.py's numpy matmul over a loaded
         matrix), and the point-serving layer SCALE.md prescribes for
         sub-second latency, collapsed into this engine for corpora that
-        fit one node. Scoring, bonuses, and dedup stay on the SAME Spark
-        column expressions (no logic twin); only retrieval moves.
+        fit one node. With the doc map resident, scoring, bonuses and
+        dedup run in `_score_local_py`, a Python twin of the Column tail
+        (`_score_column_tail`) pinned row-identical to it by the tier
+        tests; without the doc map the fused candidates re-enter Spark
+        and the Column tail scores them.
 
         Bounded: refuses (returns False) above `max_driver_rows` vectors,
         and for id column types that cannot round-trip through the VALUES
@@ -139,9 +141,9 @@ class HybridEngine:
         score idf(df)·sat(tf, dl) is query-independent — the classic
         impact-ordered-index observation — so a request's lexical leg is
         a gather over its terms' arrays plus one grouped sum, no Spark
-        job. With both tiers resident a hybrid call is ONE job (the
-        final scoring plan); if the postings bound is exceeded the
-        lexical leg simply stays on Spark (two jobs, round-6 behavior).
+        job. With every tier resident a hybrid call launches no Spark
+        job; if the postings bound is exceeded the lexical leg simply
+        stays on Spark (one job for that leg).
 
         `borrow_vectors_from` (opt-in): a `PublishedVectorIndex` whose
         resident raw matrix this engine SHARES instead of collecting its
@@ -166,13 +168,9 @@ class HybridEngine:
         if borrow_vectors_from is not None:
             borrowed = self._borrow_vector_tier(borrow_vectors_from,
                                                 max_driver_rows)
-        if borrowed is not None:
-            n_docs_bound = len(borrowed[0])
-        else:
-            n_docs_bound = self.emb.count()
-            if n_docs_bound > max_driver_rows:
-                self.disable_interactive()
-                return False
+        if borrowed is None and self.emb.count() > max_driver_rows:
+            self.disable_interactive()
+            return False
         # Tiers below are rebuilt conditionally (postings bound, atomic
         # columns); reset them FIRST so a re-enable whose corpus newly
         # crosses a per-tier bound degrades that tier to the Spark path
@@ -187,29 +185,6 @@ class HybridEngine:
             self._ids = np.array([r[0] for r in rows])
             self._mat = np.array([list(r[1]) for r in rows])
 
-        # Serving copy of the corpus: the pinned docs frame keeps its batch
-        # partitioning (32 one-row-ish partitions here), and a per-request
-        # probe scan pays one task DISPATCH per partition — pure scheduler
-        # tax at O(k) serving scale. Coalesce to ~250k rows/partition and
-        # register as a temp view for the single-statement fast path.
-        import uuid
-
-        if self._docs_view is not None:
-            # Re-enable (e.g. after upsert_documents): release the prior
-            # serving copy — a leaked temp view would pin the OLD corpus
-            # checkpoint for the life of the session.
-            self.spark.catalog.dropTempView(self._docs_view)
-        # The corpus frame can be LARGER than the embeddings frame the
-        # row bound was checked on (user-supplied partial embeddings), so
-        # the doc-map tier and the serving-view sizing bound on the DOCS
-        # count — max_driver_rows is a promise about every driver copy.
-        n_corpus = self.docs.count()
-        n_parts = max(1, int(max(n_docs_bound, n_corpus) // 250_000) + 1)
-        self._docs_serving = (self.docs.select(self.id_col, self.text_col)
-                              .coalesce(n_parts).localCheckpoint())
-        self._docs_view = f"serving_docs_{uuid.uuid4().hex[:12]}"
-        self._docs_serving.createOrReplaceTempView(self._docs_view)
-
         sc = self.index.scoring_view()
         if sc.count() <= max_driver_postings:
             n_docs, avgdl = self.index.stats_literals()
@@ -221,11 +196,13 @@ class HybridEngine:
                 np.array([r["dl"] for r in srows]),
                 n_docs, avgdl)
 
-        # Point-lookup tier: the full corpus rows as a driver dict (same
-        # max_driver_rows bound the vector matrix already passed) — only
+        # Point-lookup tier: the full corpus rows as a driver dict — only
         # when every column is an atomic SQL type the literal return path
-        # can round-trip.
-        if n_corpus <= max_driver_rows and all(
+        # can round-trip. The corpus frame can be LARGER than the
+        # embeddings frame the row bound was checked on (user-supplied
+        # partial embeddings), so the map bounds on the DOCS count —
+        # max_driver_rows is a promise about every driver copy.
+        if self.docs.count() <= max_driver_rows and all(
                 not f.dataType.simpleString().startswith(
                     ("array", "map", "struct", "binary"))
                 for f in self.docs.schema.fields):
@@ -308,10 +285,7 @@ class HybridEngine:
         corpus-schema changed/new rows (removal-wins already applied)
         plus their `_embedding`; `removed` the ids the batch deletes.
         The Spark work here is ONE collect of `fresh` (rows and vectors
-        together) and, when the serving view is live, its lazy
-        delta-merge, whose anti-join broadcasts the batch's id set from
-        a driver-local relation (no re-scan of the batch, no
-        `distinct`).
+        together).
 
         Per tier: vector matrix/doc map drop the batch's rows and append
         the fresh ones; the lexical tier drops the batch's postings from
@@ -323,10 +297,7 @@ class HybridEngine:
         sensitive to any batch (recompute is one vectorized numpy pass
         over ≤max_driver_postings rows, no Spark job). n_docs/avgdl come
         exactly from the doc-level dl values (integer-valued doubles:
-        sums are exact, the division matches Spark's avg). The serving
-        corpus view delta-merges lazily (anti-join ∪ batch, lazy
-        checkpoint) so engines that never hit the generated-SQL tail
-        never pay for it.
+        sums are exact, the division matches Spark's avg).
 
         Bound discipline mirrors enable_interactive: vector/doc-map rows
         over `max_driver_rows` → False (caller re-enables, which refuses
@@ -410,33 +381,13 @@ class HybridEngine:
         else:
             self._lex = self._fwd = None
             self._lex_vocab = None
-
-        # --- serving corpus view: lazy delta-merge --------------------
-        if self._docs_view is not None and self._docs_serving is not None:
-            n_parts = max(1, len(ids2) // 250_000 + 1)
-            self._docs_serving = (
-                self._docs_serving
-                .join(F.broadcast(self._ids_df(drop)), self.id_col,
-                      "left_anti")
-                .unionByName(fresh.select(self.id_col, self.text_col))
-                .coalesce(n_parts)
-                # lazy: materializes (and flattens) only if the SQL tail
-                # actually reads it — repeated upserts before first use
-                # stack a batch-deep lazy tower, paid once then truncated
-                .localCheckpoint(eager=False))
-            self._docs_serving.createOrReplaceTempView(self._docs_view)
         return True
 
     def disable_interactive(self) -> None:
         """Release every driver-resident interactive tier (vector matrix,
-        lexical impact arrays, doc map, serving temp view); all calls fall
-        back to the full Spark paths. Idempotent; called automatically
-        when a re-enable crosses a bound so no tier can serve a stale
-        corpus snapshot."""
-        if self._docs_view is not None:
-            self.spark.catalog.dropTempView(self._docs_view)
-            self._docs_view = None
-            self._docs_serving = None
+        lexical impact arrays, doc map); all calls fall back to the full
+        Spark paths. Idempotent; called automatically when a re-enable
+        crosses a bound so no tier can serve a stale corpus snapshot."""
         self._ids = self._mat = None
         self._lex = self._fwd = self._doc_rows = None
         self._lex_vocab = None
@@ -449,22 +400,16 @@ class HybridEngine:
         return self._mat is not None
 
     def _fused_literal_df(self, items: list) -> DataFrame:
-        """Fused candidates as a SQL VALUES literal — a genuine
-        LocalRelation, which matters: PySpark's createDataFrame builds an
-        RDD-backed frame whose broadcast-exchange build runs a full Spark
-        job (default-parallelism tasks), while a LocalRelation broadcast
-        builds driver-side with NO job. Doubles travel as
-        CAST('repr' AS DOUBLE) (bare decimal literals parse as DECIMAL in
-        Spark SQL; the string cast round-trips the exact double)."""
+        """Driver-fused (id, (fts_score, vector_sim)) candidates as a
+        driver-local relation (`localrel.local_df`): a LocalTableScan
+        with exact size stats, whose broadcast into the Column tail is
+        one small JVM job — no Python workers, unlike a pickled-RDD
+        `createDataFrame` frame."""
         id_t = self.docs.schema[self.id_col].dataType.simpleString()
-        if not items:
-            return (self.docs.select(self.id_col).limit(0)
-                    .withColumn("fts_score", F.lit(0.0))
-                    .withColumn("vector_sim", F.lit(0.0)))
-        return self.spark.sql(
-            f"SELECT CAST(col1 AS {id_t}) AS {self.id_col}, "
-            f"col2 AS fts_score, col3 AS vector_sim "
-            f"FROM VALUES {self._values_clause(items)}")
+        return local_df(self.spark,
+                        [(rid, fs, vs) for rid, (fs, vs) in items],
+                        f"`{self.id_col}` {id_t}, fts_score double, "
+                        f"vector_sim double")
 
     def _sql_atom(self, v, type_str: str) -> str:
         """One atomic value as a typed SQL literal: everything round-trips
@@ -507,149 +452,6 @@ class HybridEngine:
         definition all VALUES builders share."""
         return self._sql_str(v) if isinstance(v, str) else str(v)
 
-    def _values_clause(self, items: list) -> str:
-        """(id, fts_score, vector_sim) rows as a VALUES clause. Doubles
-        travel as CAST('repr' AS DOUBLE) (bare decimal literals parse as
-        DECIMAL in Spark SQL; the string cast round-trips the exact
-        double)."""
-        return ", ".join(
-            f"({self._fmt_id(rid)}, {self._sql_atom(float(fs), 'DOUBLE')}, "
-            f"{self._sql_atom(float(vs), 'DOUBLE')})"
-            for rid, (fs, vs) in items)
-
-    def _interactive_scored_sql(self, items: list, terms: list[str],
-                                w, phrase: str | None, dedupe: bool,
-                                n_results: int) -> DataFrame:
-        """The interactive scoring tail as ONE generated SQL statement —
-        one py4j round trip instead of the ~900 the Column-expression
-        build costs (~250 ms/call of pure driver-side gateway chatter,
-        profiled; the expressions themselves are identical). This is a
-        deliberately narrow TEXT TWIN of `fusion.score` +
-        `dedup_ops.fused_result_dedup` + the final projection: every
-        expression below mirrors the Column build op-for-op (same
-        greatest/least shapes, same raw-vs-rounded usage, same window
-        spec, same tie-breaks), and row-for-row identity with the
-        pure-Spark path across modes/phrase/dedupe is pinned by
-        tests/test_api.py::test_interactive_mode_equals_batch_path. Used
-        only when no synonym_groups are requested (that path needs the
-        proximity probe join and stays on the shared Column build).
-
-        No join, no inline literals: in Spark 4 even a LocalRelation's
-        broadcast-exchange build runs its own Spark job (one task per
-        VALUES row, capped at default parallelism — measured ~100 ms of
-        pure scheduler floor per call), so the candidates enter as a
-        pushed membership filter on the 1-partition serving view and the
-        two leg scores as FOLDABLE `map_from_arrays` lookups — the whole
-        request plans as one narrow single-task stage (the window/sort
-        exchanges collapse because a SinglePartition child satisfies
-        every required distribution). All per-call values (ids, scores,
-        terms, phrase) travel as PARAMETERIZED-SQL args rather than SQL
-        text: the statement is one of a few fixed shapes, so parse cost
-        is flat and the folded array/map constants land in the generated
-        code as reference objects — whole-stage codegen compiles once
-        per shape, not once per query. The arrays ride as ONE delimited
-        string each, split+cast in SQL (foldable): PySpark converts
-        list-valued args element-by-element over py4j (~130 ms measured
-        for 300 elements), while a scalar string is one call. Numeric
-        id/score reprs round-trip exactly through CAST; string ids use
-        the unit separator (chr(31)) — an id containing it falls back to
-        the shared Column build rather than risk a bad split."""
-        q = lambda c: f"`{c}`"  # noqa: E731
-        idc, textc = q(self.id_col), q(self.text_col)
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
-        ids = [rid for rid, _ in items]
-        if isinstance(ids[0], str):
-            if any("\x1f" in s for s in ids):
-                return None
-            ids_expr = "split(:ids, chr(31))"
-            args: dict = {"ids": "\x1f".join(ids)}
-        else:
-            ids_expr = (f"transform(split(:ids, ','), "
-                        f"x -> CAST(x AS {id_t}))")
-            args = {"ids": ",".join(str(i) for i in ids)}
-        args.update({
-            "fts": ",".join(repr(float(s[0])) for _, s in items),
-            "vec": ",".join(repr(float(s[1])) for _, s in items),
-            "wv": float(w.vector), "wf": float(w.fts),
-            "wc": float(w.coverage),
-        })
-        dbl = "transform(split(:{}, ','), x -> CAST(x AS DOUBLE))"
-        vsig = "least(1.0D, greatest(0.0D, vector_sim))"
-        fsig = ("(greatest(0.0D, fts_score) / "
-                "(greatest(0.0D, fts_score) + 1.0D))")
-        if terms:
-            args["terms"] = ",".join(terms)
-            cov = (f"(CAST(size(filter(split(:terms, ','), "
-                   f"x -> instr(lower({textc}), x) > 0)) AS DOUBLE) "
-                   f"/ CAST(size(split(:terms, ',')) AS DOUBLE))")
-        else:
-            cov = "0.0D"
-        if phrase:
-            args["phrase"] = phrase.lower()
-            args["wp"] = float(w.phrase)
-            phr = (f"(CASE WHEN instr(lower({textc}), :phrase) > 0 "
-                   f"THEN :wp ELSE 0.0D END)")
-        else:
-            phr = "0.0D"
-        # Each raw signal is computed ONCE in an inner projection and
-        # referenced by alias — round() and the weighted total consume
-        # the same expression node, exactly as the Column build's shared
-        # Column objects do, and the analyzer tree stays small.
-        total = ("least(1.0D, greatest(0.0D, "
-                 "_vs * :wv + _fs * :wf + _cv * :wc + _ph + 0.0D))")
-        scored = f"""
-  SELECT {idc}, {textc},
-         round(_vs, 6) AS vec_signal,
-         round(_fs, 6) AS fts_sig,
-         round(_cv, 6) AS coverage,
-         round(_ph, 6) AS phrase_bonus,
-         0.0D AS proximity_bonus,
-         round({total}, 6) AS score
-  FROM (SELECT {idc}, {textc},
-               {vsig} AS _vs, {fsig} AS _fs, {cov} AS _cv, {phr} AS _ph
-        FROM (SELECT {idc}, {textc},
-                     element_at(map_from_arrays({ids_expr},
-                       {dbl.format('fts')}), {idc}) AS fts_score,
-                     element_at(map_from_arrays({ids_expr},
-                       {dbl.format('vec')}), {idc}) AS vector_sim
-              FROM {self._docs_view}
-              WHERE array_contains({ids_expr}, {idc})))"""
-        out_cols = (f"{idc}, score, vec_signal, fts_sig, coverage, "
-                    f"phrase_bonus, proximity_bonus, duplicates_filtered, "
-                    f"substring({textc}, 1, 120) AS preview")
-        if dedupe:
-            # Flattened equivalent of fused_result_dedup's two stacked
-            # windows: rn and the total candidate count compute in ONE
-            # block; the outer block's WHERE filters to survivors BEFORE
-            # its count(*) window evaluates (SQL WHERE precedes
-            # windowing), so dropped = total - survivors — the same
-            # number the sum(rn > 1) window produced, one nesting level
-            # and one CASE tree cheaper (~80 ms/call of per-request
-            # analysis+optimize, measured).
-            dkey = (f"coalesce(nullif(trim(substring({textc}, 1, 120)), "
-                    f"''), CAST({idc} AS STRING))")
-            glob = ("OVER (PARTITION BY 1 ROWS BETWEEN UNBOUNDED "
-                    "PRECEDING AND UNBOUNDED FOLLOWING)")
-            sql = f"""
-SELECT {idc}, score, vec_signal, fts_sig, coverage,
-       phrase_bonus, proximity_bonus,
-       CAST(_n_tot - count(*) {glob} AS BIGINT) AS duplicates_filtered,
-       substring({textc}, 1, 120) AS preview
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY {dkey}
-       ORDER BY score DESC, {idc} ASC) AS rn,
-       count(*) {glob} AS _n_tot
-  FROM ({scored})
-)
-WHERE rn = 1
-ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
-        else:
-            sql = f"""
-SELECT {out_cols}
-FROM (SELECT *, CAST(0 AS BIGINT) AS duplicates_filtered FROM ({scored}))
-ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
-        return self.spark.sql(sql, args=args)
-
     @staticmethod
     def _min_pair_distance_py(toks: list[str], ga: set, gb: set):
         """Driver twin of `proximity.min_pair_distance` over one doc's
@@ -671,67 +473,34 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             prev_grp, prev_pos = grp, pos
         return best
 
-    def _interactive_scored_local(self, items: list, terms: list[str],
-                                  w, phrase: str | None, dedupe: bool,
-                                  n_results: int,
-                                  synonym_groups: list[list[str]] | None
-                                  = None,
-                                  near_window: int = 5) -> DataFrame | None:
-        """The scoring tail computed entirely driver-side over the
-        resident doc map — ZERO Spark jobs for a hybrid call when every
-        tier is resident (the result returns as a VALUES LocalRelation,
-        like get_document). A strict python twin of
-        `_interactive_scored_sql`, expression-for-expression: same
-        greatest/least clamps, same raw-vs-rounded usage, same dedup key
-        (space-trimmed 120-char preview, id-string fallback), same
-        (score desc, id asc) tie-breaks, same global duplicates_filtered
-        algebra. Rounding: Spark's round(x, 6) rounds the SHORTEST
-        decimal repr of the double (BigDecimal.valueOf = Double.toString),
-        not its exact binary expansion — Decimal(repr(x)) reproduces that
-        (Python repr is also shortest-round-trip; verified against Spark
-        on half-way values like 0.9050355, where the exact expansion
-        ...49999 rounds DOWN but both engines round UP). Residual
-        divergence needs a double where Java 17's Double.toString emits a
-        non-shortest repr AND the 6-dp boundary falls inside the extra
-        digits — vanishingly rarer than the np.round class. Row-identity
-        with the batch path is pinned by
-        test_interactive_mode_equals_batch_path (this path serves it
-        whenever the doc map is resident). Returns None when a candidate
-        id is missing from the doc map (cannot mirror the inner join
-        against a FRESHER corpus) — the caller falls through to the
-        one-job SQL tail.
-
-        With `synonym_groups` this also twins the reference's group
-        scorer (the Column path's only remaining serving use): coverage
-        is per-group any-member SUBSTRING containment, and the proximity
-        bonus fires when the first two groups' TOKENS co-occur within
-        `near_window` kept-token positions (`_min_pair_distance_py`,
-        mirroring operators/proximity.min_pair_distance over
-        py_tokenize — the tested driver twin of `tokenize`)."""
-        if int(n_results) < 0:
-            return None  # let the SQL tail raise, as the batch path does
-        scored = self._score_local_py(items, terms, w, phrase, dedupe,
-                                      n_results,
-                                      synonym_groups=synonym_groups,
-                                      near_window=near_window)
-        if scored is None:
-            return None
-        top, dropped = scored
-        if not top:
-            return None
-        return self._scored_values_df([(None, top, dropped)])
-
     def _score_local_py(self, items: list, terms: list[str], w,
                         phrase: str | None, dedupe: bool, n_results: int,
                         synonym_groups: list[list[str]] | None = None,
                         near_window: int = 5
                         ) -> tuple[list[tuple], int] | None:
-        """The pure-Python scoring tail shared by the single-query local
-        path and the batch serving tier: returns (top rows, dropped
-        count), or None when a candidate id is missing from the doc map
-        (the caller must fall through to a Spark tail). Each row is
-        (id, score, vec, fts, cov, phrase, prox, narrator, preview),
-        all already HALF_UP-rounded to 6 dp."""
+        """The pure-Python scoring tail over the resident doc map, shared
+        by the single-query path and the batch serving tier: returns (top
+        rows, dropped count), or None when a candidate id is missing from
+        the doc map (it cannot mirror the inner join against a FRESHER
+        corpus; the caller falls through to `_score_column_tail`). Each
+        row is (id, score, vec, fts, cov, phrase, prox, narrator,
+        preview), all already rounded to 6 dp.
+
+        A strict twin of `_score_column_tail`, expression for expression:
+        same greatest/least clamps, same raw-vs-rounded usage, same dedup
+        key (space-trimmed 120-char preview, id-string fallback), same
+        (score desc, id asc) tie-breaks, same global duplicates_filtered
+        algebra. Rounding: Spark's round(x, 6) rounds the SHORTEST
+        decimal repr of the double (BigDecimal.valueOf = Double.toString),
+        not its exact binary expansion — Decimal(repr(x)) reproduces that
+        (verified on half-way values like 0.9050355, whose exact
+        expansion ...49999 rounds DOWN but both engines round UP). With
+        `synonym_groups`, coverage is per-group any-member SUBSTRING
+        containment and the proximity bonus fires when the first two
+        groups' TOKENS co-occur within `near_window` kept-token positions
+        (`_min_pair_distance_py`). Row-identity with the Column tail is
+        pinned by test_interactive_mode_equals_batch_path and
+        test_synonym_groups_local_twin_equals_batch."""
         from decimal import ROUND_HALF_UP, Decimal
 
         q6 = Decimal("0.000001")
@@ -806,11 +575,21 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         — a single (None, ...) group emits the plain hybrid schema; the
         batch tier passes N indexed groups and gains a leading
         `query_idx` column, paying ONE statement parse for the whole
-        batch instead of one per query."""
+        batch instead of one per query. With no rows at all the result
+        is an empty driver-local relation of the same schema (an empty
+        VALUES clause does not parse)."""
         id_t = self.docs.schema[self.id_col].dataType.simpleString()
         dbl = lambda x: self._sql_atom(float(x), "DOUBLE")  # noqa: E731
         with_nar = self.narrator_col is not None
         with_qidx = groups[0][0] is not None
+        if not any(top for _, top, _ in groups):
+            return local_df(self.spark, [], (
+                ("query_idx int, " if with_qidx else "")
+                + f"`{self.id_col}` {id_t}, score double, "
+                f"vec_signal double, fts_sig double, coverage double, "
+                f"phrase_bonus double, proximity_bonus double, "
+                + ("narrator_bonus double, " if with_nar else "")
+                + "duplicates_filtered bigint, preview string"))
         vals = ", ".join(
             "({}{}, {}, {}, {}, {}, {}, {}, {}{}, {})"
             .format(f"{int(qidx)}, " if with_qidx else "",
@@ -1229,8 +1008,6 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         pushed-filter scan."""
         import re as _re
 
-        if int(n_results) < 0:
-            raise ValueError(f"n_results must be >= 0, got {n_results}")
         num = _re.search(r"([0-9]+)[^0-9]*$", query).group(1)
         id_t = self.docs.schema[self.id_col].dataType.simpleString()
         integral = id_t in ("tinyint", "smallint", "int", "bigint")
@@ -1310,6 +1087,11 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         can return fewer than n_results, like a selective `where` does.
         Returns (id, score, vec_signal, fts_sig, coverage, phrase_bonus,
         proximity_bonus, duplicates_filtered, preview)."""
+        if int(n_results) < 0:
+            # Every tier must fail identically and before any leg runs:
+            # the Column tail's .limit(n) raises only at analysis, and
+            # the Python tail's [:n] would silently drop the tail rows.
+            raise ValueError(f"n_results must be >= 0, got {n_results}")
         w = fusion.resolve_weights(scoring_mode, fts_available, vector_available)
         if weight_overrides:
             w = replace(w, **weight_overrides)
@@ -1362,13 +1144,8 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             # comes from the resident impact arrays when the tier is
             # built (no Spark job) or from collecting the O(k) Spark leg
             # otherwise (one job); the vector top-k and the exact
-            # max/coalesce fusion run driver-side, and the fused
-            # candidates re-enter as a LOCAL relation — its broadcast
-            # below builds without a Spark job, so the whole request is
-            # ONE job (the scoring plan) with both tiers resident.
-            # Fusion on collected values is exact arithmetic on ≤2k
-            # pairs; the scoring plan below is byte-identical to the
-            # batch path.
+            # max/coalesce fusion run driver-side. Fusion on collected
+            # values is exact arithmetic on ≤2k pairs.
             fused_map: dict = {}
             if fts_available and terms:
                 if nar_toks and self._narrator_tier() is not None:
@@ -1392,35 +1169,21 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
                 qvec = encode_query(intent.normalized, self.dim)
                 for rid, s in self._vec_topk_interactive(qvec, k):
                     fused_map.setdefault(rid, [0.0, 0.0])[1] = s
-            if fused_map:
-                # Zero-job tail first: with the doc map resident the
-                # scoring runs fully driver-side and the result is a
-                # VALUES LocalRelation (no Spark job at all — the
-                # reference's in-process latency class); it also twins
-                # the synonym-group scorer (group coverage + token
-                # proximity). Falls through to the single-statement SQL
-                # tail (one job, no synonym support) when the map is
-                # absent or can't mirror the corpus join; the SQL tail
-                # returns None for ids its delimited-string transport
-                # can't carry safely. All three tails are row-identical
-                # (test_interactive_mode_equals_batch_path).
-                out = None
-                if self._doc_rows is not None:
-                    out = self._interactive_scored_local(
-                        sorted(fused_map.items()), terms, w, intent.phrase,
-                        dedupe, n_results, synonym_groups=synonym_groups,
-                        near_window=near_window)
-                # (the single-statement SQL tail has no narrator-bonus
-                # expression; narrator engines fall through to the batch
-                # Column tail instead, which has it)
-                if out is None and not synonym_groups \
-                        and self.narrator_col is None:
-                    out = self._interactive_scored_sql(
-                        sorted(fused_map.items()), terms, w, intent.phrase,
-                        dedupe, n_results)
-                if out is not None:
-                    return out
-            fused = self._fused_literal_df(sorted(fused_map.items()))
+            items = sorted(fused_map.items())
+            # With the doc map resident the scoring runs driver-side and
+            # the result is a VALUES LocalRelation: no Spark job at all
+            # (the reference's in-process latency class). Without it, or
+            # when a candidate is missing from the map, the candidates
+            # re-enter as a LocalRelation and take the Column tail below.
+            # Both tails are row-identical
+            # (test_interactive_mode_equals_batch_path).
+            if self._doc_rows is not None:
+                scored = self._score_local_py(
+                    items, terms, w, intent.phrase, dedupe, n_results,
+                    synonym_groups=synonym_groups, near_window=near_window)
+                if scored is not None:
+                    return self._scored_values_df([(None, *scored)])
+            fused = self._fused_literal_df(items)
         else:
             fts = (self._narrator_leg(intent.narrator_query, k, allowed)
                    if nar_toks
@@ -1439,6 +1202,19 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             else:
                 vec = self._empty_leg("sim")
             fused = fusion.fuse(fts, vec, key=self.id_col)
+        return self._score_column_tail(fused, terms, w, intent.phrase,
+                                       dedupe, n_results, synonym_groups,
+                                       near_window)
+
+    def _score_column_tail(self, fused: DataFrame, terms: list[str], w,
+                           phrase: str | None, dedupe: bool, n_results: int,
+                           synonym_groups: list[list[str]] | None = None,
+                           near_window: int = 5) -> DataFrame:
+        """The Spark scoring tail over fused (id, fts_score, vector_sim)
+        candidates: join the corpus text, score, dedup, rank, top-n. It
+        serves the Spark path and the resident engine whenever the
+        driver-side `_score_local_py` cannot (no doc map, or a candidate
+        missing from it)."""
         # Candidates are O(k) -> broadcast them into the documents scan.
         # INNER join: candidates come from this engine's own index and
         # embeddings, so every id resolves; the reference likewise skips
@@ -1483,8 +1259,8 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             with_text = with_text.join(F.broadcast(prox), self.id_col, "left")
             prox_hit = F.col("min_dist") <= max(1, near_window)
 
-        phrase_hit = (F.instr(text_lower, intent.phrase.lower()) > 0
-                      if intent.phrase else None)
+        phrase_hit = (F.instr(text_lower, phrase.lower()) > 0
+                      if phrase else None)
         narrator_hit = None
         if self.narrator_col and terms:
             # spec:330-332 — ANY query term, case-folded, in the narrator
@@ -1665,15 +1441,6 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
                     break
                 groups.append((i, scored[0], scored[1]))
         if fast:
-            if not any(top for _, top, _ in groups):
-                nar = ("narrator_bonus double, " if self.narrator_col
-                       else "")
-                id_t = self.docs.schema[self.id_col].dataType.simpleString()
-                return self.spark.createDataFrame([], (
-                    f"query_idx int, `{self.id_col}` {id_t}, score double, "
-                    f"vec_signal double, fts_sig double, coverage double, "
-                    f"phrase_bonus double, proximity_bonus double, {nar}"
-                    f"duplicates_filtered bigint, preview string"))
             return self._scored_values_df(groups)
         frames = [
             self.hybrid_search(q, n_results, scoring_mode, fts_available,
@@ -1846,7 +1613,8 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         (`bm25.refresh_index` — postings/doc_len delete+reinsert,
         term_df/scoring-view delta merges), embedding-cache delta
         (changed docs re-embed, others untouched), and — when interactive
-        serving was ever enabled — a tier rebuild under the same bounds.
+        serving was ever enabled — an in-place delta of the driver-resident
+        tiers under the same bounds.
         A batch that grows the corpus past those bounds RELEASES the
         interactive tiers (Spark paths take over; `interactive_enabled`
         tells you which side you're on) rather than serving a stale
@@ -1868,10 +1636,10 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         MERGE, the eager re-pins of the merged documents, embeddings and
         lexical doc lengths, and the lazy re-pins of the other lexical
         index frames (each coalesced to its old partition count, so
-        chained upserts keep a flat task count). Driver memory: the id sets are the
-        same bytes the broadcasts collect to the driver anyway; the
-        driver-resident tiers delta-apply in place (bounded by
-        definition)."""
+        chained upserts keep a flat task count). Driver memory: the id
+        sets are the same bytes the broadcasts collect to the driver
+        anyway; the driver-resident tiers delta-apply in place (bounded
+        by definition)."""
         from collections import Counter
 
         from .sources.ingest import (

@@ -200,7 +200,7 @@ def test_interactive_mode_equals_batch_path(spark):
              inter.hybrid_search(q, n_results=10,
                                  scoring_mode=mode).collect()]
         assert a == b, (q, mode)
-    # flag combinations route through the generated-SQL tail too
+    # flag combinations route through the driver-local tail too
     for kw in [{"dedupe": False}, {"vector_available": False},
                {"fts_available": False}, {"fts": 0.9}]:
         a = [r.asDict() for r in
@@ -210,7 +210,7 @@ def test_interactive_mode_equals_batch_path(spark):
              inter.hybrid_search("patience and prayer", n_results=10,
                                  **kw).collect()]
         assert a == b, kw
-    # synonym_groups falls back to the shared Column build — still equal
+    # synonym_groups take the driver-local tail's group scorer — still equal
     sg = [["patience", "endurance"], ["prayer", "worship"]]
     a = [r.asDict() for r in
          batch.hybrid_search("patience and prayer", n_results=10,
@@ -473,7 +473,7 @@ def test_upsert_past_bound_releases_interactive_tiers(spark):
     eng.upsert_documents(incoming)
     assert not eng.interactive_enabled
     assert eng._lex is None and eng._fwd is None
-    assert eng._doc_rows is None and eng._docs_view is None
+    assert eng._doc_rows is None
     fresh = HybridEngine(spark, eng.docs)
     a = [r.asDict() for r in eng.hybrid_search("patience", 10).collect()]
     b = [r.asDict() for r in fresh.hybrid_search("patience", 10).collect()]
@@ -693,10 +693,10 @@ def test_local_tail_adversarial_corpus_equals_batch(spark):
 def test_local_and_sql_scoring_tails_agree_on_rounding_boundaries(spark):
     """Spark's round(x, 6) rounds the SHORTEST decimal repr of the
     double (BigDecimal.valueOf), not its exact binary expansion — e.g.
-    0.9050355 (exactly 0.90503549999... in binary) rounds UP. The local
-    tail must agree on exactly these half-way values (it once used the
-    exact expansion and scored 0.905035 where every Spark tail said
-    0.905036)."""
+    0.9050355 (exactly 0.90503549999... in binary) rounds UP. The Python
+    tail must agree with the Column tail on exactly these half-way values
+    (it once used the exact expansion and scored 0.905035 where Spark
+    said 0.905036)."""
     from dataclasses import replace
 
     from hadith_vector_search_spark.operators import fusion
@@ -712,19 +712,22 @@ def test_local_and_sql_scoring_tails_agree_on_rounding_boundaries(spark):
                 3.15e-05, 0.9999995, 1.0 / 3, 0.123456749999]
     items = sorted((i + 1, (0.0, v)) for i, v in enumerate(boundary))
     for dedupe in (True, False):
-        a = [r.asDict() for r in eng._interactive_scored_local(
-            items, [], w, None, dedupe, 10).collect()]
-        b = [r.asDict() for r in eng._interactive_scored_sql(
-            items, [], w, None, dedupe, 10).collect()]
+        top, dropped = eng._score_local_py(items, [], w, None, dedupe, 10)
+        a = [r.asDict() for r in
+             eng._scored_values_df([(None, top, dropped)]).collect()]
+        b = [r.asDict() for r in eng._score_column_tail(
+            eng._fused_literal_df(items), [], w, None, dedupe,
+            10).collect()]
         assert a == b, dedupe
     assert any(r["score"] == 0.905036 for r in a)  # the half-way case
 
 
 def test_sql_tail_still_serves_without_doc_map(spark):
     """With the doc map absent (e.g. a non-atomic corpus column blocks
-    it), the hybrid call must fall back to the one-job generated-SQL
-    tail and stay row-identical to the batch path end-to-end — keeps the
-    middle tail covered now that the local tail serves by default."""
+    it), a resident engine's hybrid call scores its driver-fused
+    candidates on the Column tail and must stay row-identical to the
+    batch path end-to-end — keeps that fallback covered now that the
+    Python tail serves by default."""
     from hadith_vector_search_spark.sources import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -740,6 +743,50 @@ def test_sql_tail_still_serves_without_doc_map(spark):
         b = [r.asDict() for r in
              inter.hybrid_search(q, n_results=10, **kw).collect()]
         assert a == b, (q, kw)
+
+
+def _two_tier_engines(spark, narrator_col=None):
+    rows = [(1, "Umar", "patience and prayer bring reward"),
+            (2, "Aisha", "charity given in secret"),
+            (3, "Abu Huraira", "patience in anger is strength")]
+    docs = spark.createDataFrame(rows, "doc_id int, narrator string, "
+                                       "text string")
+    batch = HybridEngine(spark, docs, narrator_col=narrator_col)
+    inter = HybridEngine(spark, docs, narrator_col=narrator_col)
+    assert inter.enable_interactive()
+    assert inter._doc_rows is not None and inter._lex is not None
+    return batch, inter
+
+
+def test_zero_results_resident_tail_launches_no_jobs(spark):
+    """n_results == 0 on a resident engine returns an empty driver-local
+    frame from both the single-query and the batch tier — no Spark job
+    (a pickled-RDD empty frame runs one on collect) — with exactly the
+    Spark path's column types."""
+    tracker = spark.sparkContext.statusTracker()
+    for nar in (None, "narrator"):
+        batch, inter = _two_tier_engines(spark, narrator_col=nar)
+        assert inter.hybrid_search("patience and prayer", 3).collect()
+        before = set(tracker.getJobIdsForGroup())
+        one = inter.hybrid_search("patience and prayer", 0)
+        many = inter.hybrid_search_batch(["patience", "charity"], 0)
+        assert one.collect() == [] and many.collect() == []
+        after = set(tracker.getJobIdsForGroup())
+        assert after == before, f"launched jobs: {sorted(after - before)}"
+        assert one.dtypes == batch.hybrid_search(
+            "patience and prayer", 0).dtypes, nar
+        assert many.dtypes == batch.hybrid_search_batch(
+            ["patience", "charity"], 0).dtypes, nar
+
+
+def test_hybrid_negative_n_results_raises_value_error_both_tiers(spark):
+    """A negative n_results is a caller bug: hybrid_search raises
+    ValueError before running any leg, on retrieval and exact-reference
+    queries alike, on the Spark path and on the resident tiers."""
+    for eng in _two_tier_engines(spark):
+        for q in ("patience and prayer", "hadith 2"):
+            with pytest.raises(ValueError, match="n_results"):
+                eng.hybrid_search(q, n_results=-1)
 
 
 def test_synonym_groups_local_twin_equals_batch(spark):
@@ -934,8 +981,8 @@ def test_upsert_delta_equals_fresh_enable(spark):
     # removed doc is gone from every tier
     assert eng.get_document_row(3) is None
     assert all(r["doc_id"] != 3 for r in a["hybrid"])
-    # the lazily delta-merged serving VIEW is correct too: force the
-    # generated-SQL tail (doc map off) on both engines
+    # the delta-updated vector and lexical tiers also feed the Column
+    # tail correctly: force it (doc map off) on both engines
     eng._doc_rows = None
     fresh._doc_rows = None
     a2 = [r.asDict() for r in eng.hybrid_search(

@@ -10,9 +10,19 @@ of broadcast-sized sides; corpus-wide all-pairs work routes through the
 Arrow-batched numpy matmuls in operators/similarity.py instead. Elements
 are cast to double before arithmetic so results are stable and
 DuckDB-comparable.
+
+Literal vectors (a query embedding, an IVF/LSH codebook row, a PQ lookup
+table) are built from SQL text, one `F.expr` per literal: each Column
+builder is its own py4j round trip, and the per-element
+`F.array(F.lit(x), ...)` form costs ~5 of them per element (~2,000 for
+one 384-dim query vector). The text spells each element with the digits
+of its shortest round-tripping `repr` and a `D` suffix, so the parsed
+double is the Python double bit for bit (`double_sql`).
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -51,10 +61,58 @@ def l2_normalize(a: Column | str) -> Column:
     return F.when(n > 0, F.transform(_c(a), lambda x: x.cast("double") / n))
 
 
+_NON_FINITE = {"nan": "CAST('NaN' AS DOUBLE)",
+               "inf": "CAST('Infinity' AS DOUBLE)",
+               "-inf": "CAST('-Infinity' AS DOUBLE)"}
+
+
+def double_sql(x: float) -> str:
+    """One double as a SQL literal. Python's `repr` is the shortest
+    decimal that parses back to the same double (`float(repr(x)) == x`),
+    and Spark parses a `D` literal with Java's `Double.parseDouble`,
+    which rounds a decimal correctly too, so the literal carries x bit
+    for bit — -0.0 and subnormals included. The repr's digits are
+    written as an integer mantissa and an exponent (0.0625 ->
+    `625E-4D`, the same decimal value): Spark's lexer takes a slow,
+    predicate-checked path for every literal with a decimal point,
+    about 7x the parse time, and `F.expr` text is parsed each time the
+    column is used in a plan. NaN and the infinities have no literal
+    syntax and go through a cast from their string names."""
+    r = repr(float(x))
+    if r in _NON_FINITE:
+        return _NON_FINITE[r]
+    sign, digits, exp = Decimal(r).as_tuple()
+    return f"{'-' if sign else ''}{''.join(map(str, digits))}E{exp}D"
+
+
+def _double_array_sql(vec) -> str:
+    """SQL text of an `array<double>` literal (see `double_sql`)."""
+    return "array(" + ", ".join(map(double_sql, vec)) + ")"
+
+
+def _quote_ident(name: str) -> str:
+    """A column name as one backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dot_lit_sql(vec_col: str, vec) -> str:
+    """SQL text of `dot(F.col(vec_col), vector_lit(vec))`: the same
+    cast-to-double products folded left to right from 0.0, so a
+    codebook's whole expression tree can be built as one `F.expr`."""
+    return (f"aggregate(zip_with({_quote_ident(vec_col)}, "
+            f"{_double_array_sql(vec)}, "
+            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            "0.0D, (acc, v) -> acc + v)")
+
+
 def vector_lit(vec: list[float]) -> Column:
     """A literal query vector (SURVEY V2's single-query embed becomes a
-    constant-folded array literal)."""
-    return F.array(*[F.lit(float(x)) for x in vec])
+    constant-folded array literal). One `F.expr` over the SQL text of
+    the whole array costs a single py4j round trip whatever the
+    dimension; a Column built per element would cost ~5 per element.
+    The analyzed expression is the same array of double literals and
+    folds to the same constant."""
+    return F.expr(_double_array_sql(vec))
 
 
 def round6_arr(arr):
@@ -75,7 +133,7 @@ def round6_arr(arr):
     frac = scaled - np.floor(scaled)
     cand = np.abs(frac - 0.5) < 1e-4
     if cand.any():
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import ROUND_HALF_UP
 
         q6 = Decimal("0.000001")
         for idx in zip(*np.nonzero(cand)):  # dimension-agnostic (the

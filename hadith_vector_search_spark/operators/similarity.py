@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.vector import dot
+from ..functions.vector import dot, dot_lit_sql, vector_lit
 from ..localrel import local_df
 
 
@@ -37,8 +37,6 @@ def cosine_scores(emb: DataFrame, query_vec, id_col: str = "vec_id",
     """Score every vector against one literal query vector. Inputs are
     assumed L2-normalized (dot == cosine), matching the reference's quran
     leg (normalized encode at /root/reference/quran_mcp/embeddings.py:28-37)."""
-    from ..functions.vector import vector_lit
-
     q = vector_lit(query_vec) if isinstance(query_vec, (list, tuple)) else query_vec
     return emb.select(F.col(id_col), dot(F.col(vec_col), q).alias("sim"))
 
@@ -128,15 +126,12 @@ def sign_bucket_expr(planes, vec_col: str = "embedding") -> Column:
     directories than a query probes (the `cell_structs` discipline,
     LSH twin). `planes` is plane-id-ordered: `data_planes` Rows or
     plain (plane_id, pvec) tuples — the stores keep their sidecars as
-    tuples."""
-    from ..functions.vector import vector_lit
-
+    tuples. Built as one SQL expression (one py4j round trip for the
+    whole plane set), with `dot`'s arithmetic (`dot_lit_sql`)."""
     vecs = [r[1] if isinstance(r, tuple) else r.pvec for r in planes]
-    return F.concat(*[
-        F.when(dot(F.col(vec_col), vector_lit(v)) >= 0, F.lit("1"))
-         .otherwise(F.lit("0"))
-        for v in vecs
-    ])
+    return F.expr("concat(" + ", ".join(
+        f"CASE WHEN {dot_lit_sql(vec_col, v)} >= 0 THEN '1' ELSE '0' END"
+        for v in vecs) + ")")
 
 
 def ann_topk_lsh(emb: DataFrame, query_id: int, n_planes: int = 6, k: int = 5,
@@ -151,8 +146,6 @@ def ann_topk_lsh(emb: DataFrame, query_id: int, n_planes: int = 6, k: int = 5,
     shuffle of the whole corpus — one full-scan pass, zero wide stages
     before the final top-k. `sign_lsh_buckets` remains the relational
     variant for when planes are themselves a distributed table."""
-    from ..functions.vector import vector_lit
-
     plane_rows = sorted(data_planes(emb, n_planes, id_col, vec_col).collect(),
                         key=lambda r: r.plane_id)
     bucket = sign_bucket_expr(plane_rows, vec_col)
@@ -183,8 +176,6 @@ def ann_topk_lsh_multiprobe(emb: DataFrame, query_id: int,
     plan is identical to `ann_topk_lsh` with an IN-list bucket filter,
     which bucket-partitioned storage turns into multi-partition
     pruning."""
-    from ..functions.vector import vector_lit
-
     plane_rows = sorted(data_planes(emb, n_planes, id_col, vec_col).collect(),
                         key=lambda r: r.plane_id)
     qsel = [F.col(vec_col).alias("qvec")]
@@ -315,20 +306,28 @@ def cell_structs(centroids: list[tuple[int, list[float]]],
     The codebook is tiny by construction — inline it as literals so cell
     assignment is a NARROW projection: array of (cd, -cent_id) structs,
     argmax via array_max (struct compare = cd first, then -cent_id, i.e.
-    ties go to the LOWEST centroid id)."""
-    from ..functions.vector import vector_lit
+    ties go to the LOWEST centroid id).
 
-    return F.array(*[
-        F.struct(F.round(dot(F.col(vec_col), vector_lit(cvec)), 6).alias("cd"),
-                 F.lit(-cid).alias("ncid"))
-        for cid, cvec in centroids
-    ])
+    The whole array is one SQL expression, so the codebook costs one
+    py4j round trip however large it is (a Column built per literal
+    element costs ~5 each); `dot_lit_sql` keeps `dot`'s arithmetic, so
+    the optimized plan is the Column-built one."""
+    return F.expr(_cell_structs_sql(centroids, vec_col))
+
+
+def _cell_structs_sql(centroids, vec_col: str) -> str:
+    return "array(" + ", ".join(
+        f"named_struct('cd', round({dot_lit_sql(vec_col, cvec)}, 6), "
+        f"'ncid', {-int(cid)})"
+        for cid, cvec in centroids) + ")"
 
 
 def cell_of(centroids: list[tuple[int, list[float]]],
             vec_col: str = "embedding") -> Column:
-    """Nearest-centroid cell id as a column (see `cell_structs`)."""
-    return (-F.array_max(cell_structs(centroids, vec_col))["ncid"]).cast("int")
+    """Nearest-centroid cell id as a column (see `cell_structs`), also
+    one SQL expression."""
+    return F.expr("CAST(-array_max("
+                  f"{_cell_structs_sql(centroids, vec_col)}).ncid AS INT)")
 
 
 def ivf_topk(emb: DataFrame, query_id: int, n_centroids: int = 8,
@@ -352,8 +351,6 @@ def ivf_topk(emb: DataFrame, query_id: int, n_centroids: int = 8,
                          .alias("top"),
                          F.col(vec_col).alias("qvec"))
                  .collect()[0])
-    from ..functions.vector import vector_lit
-
     probes = [-s["ncid"] for s in probe_top["top"]]
     qvec = vector_lit(probe_top["qvec"])
     scan = (emb.select(F.col(id_col), F.col(vec_col),
@@ -396,17 +393,11 @@ def cell_dedup_list(emb: DataFrame, n_centroids: int = 8,
     thresholding — so a DuckDB oracle replays assignment, pairing, and
     representative choice exactly. Per-cell pairs run as one
     `applyInPandas` numpy matmul per cell."""
-    from ..functions.vector import vector_lit
-
     if centroids is None:
         centroids = [(r.cent_id, r.cvec) for r in sorted(
             data_centroids(emb, n_centroids, id_col, vec_col).collect(),
             key=lambda r: r.cent_id)]
-    cells = F.array(*[
-        F.struct(F.round(dot(F.col(vec_col), vector_lit(cvec)), 6).alias("cd"),
-                 F.lit(-cid).alias("ncid"))
-        for cid, cvec in centroids
-    ])
+    cells = cell_structs(centroids, vec_col)
     assigned = emb.select(F.col(id_col), F.col(vec_col),
                           (-F.array_max(cells)["ncid"]).alias("cent_id"))
 
@@ -714,8 +705,7 @@ def pq_adc_expr(luts: list["np.ndarray"],
     residual terms first and adds the cell dot outside the aggregate, so
     both engines associate identically (FP addition is commutative but
     not associative; this is a contract, not pedantry)."""
-    terms = [F.element_at(F.array(*[F.lit(float(x)) for x in lut]),
-                          F.col(f"code_{m}") + 1)
+    terms = [F.element_at(vector_lit(lut), F.col(f"code_{m}") + 1)
              for m, lut in enumerate(luts)]
     total = terms[0]
     for t in terms[1:]:
@@ -723,6 +713,14 @@ def pq_adc_expr(luts: list["np.ndarray"],
     if cell_term is not None:
         total = cell_term + total
     return F.round(total, 6)
+
+
+def probe_cell_dots(probes, dots, cell: Column) -> Column:
+    """dot(q, centroid_cell) for a row's cell, looked up in a per-probe
+    literal map (the residual-IVFADC cell term). The probe ids and the
+    dots are one SQL array literal each."""
+    ids = F.expr("array(" + ", ".join(str(int(p)) for p in probes) + ")")
+    return F.element_at(F.map_from_arrays(ids, vector_lit(dots)), cell)
 
 
 def ivfpq_topk(emb: DataFrame, query_id: int,
@@ -739,8 +737,6 @@ def ivfpq_topk(emb: DataFrame, query_id: int,
     (id, adc_sim, sim). The published store's `ivfpq_topk` answers the
     same query from its celled CODES artifact instead of encoding
     in-pass; this form is the storeless twin the tests pin it against."""
-    from ..functions.vector import vector_lit
-
     cells = cell_structs(centroids, vec_col)
     probe_top = (emb.filter(F.col(id_col) == query_id)
                  .select(F.slice(F.reverse(F.array_sort(cells)), 1, n_probe)
@@ -761,13 +757,10 @@ def ivfpq_topk(emb: DataFrame, query_id: int,
                           residual_centroids=centroids,
                           cell_col="cent_id")
         q = np.asarray(qvec, dtype=np.float64)
-        qc = F.map_from_arrays(
-            F.array(*[F.lit(int(p)) for p in probes]),
-            F.array(*[F.lit(float(
-                np.asarray(dict(centroids)[p], dtype=np.float64) @ q))
-                for p in probes]))
-        adc = pq_adc_expr(luts, cell_term=F.element_at(
-            qc, F.col("cent_id")))
+        cmap = dict(centroids)
+        adc = pq_adc_expr(luts, cell_term=probe_cell_dots(
+            probes, [np.asarray(cmap[p], dtype=np.float64) @ q
+                     for p in probes], F.col("cent_id")))
     else:
         coded = pq_encode(scan, subbooks, id_col, vec_col)
         adc = pq_adc_expr(luts)
@@ -833,7 +826,6 @@ def pq_topk(emb: DataFrame, query_id: int, n_cents: int = 4, k: int = 5,
              .mapInPandas(score, schema=f"{id_col} {id_type}, adc_sim double")
              .orderBy(F.desc("adc_sim"), F.asc(id_col))
              .limit(rerank))
-    from ..functions.vector import vector_lit
     qlit = vector_lit([float(x) for x in qv])
     return (emb.join(F.broadcast(cands), id_col)
             .select(F.col(id_col), "adc_sim",

@@ -102,7 +102,13 @@ def clone_store(src_dir: str, dst_dir: str) -> None:
     re-publish of the same rows pays a full read + exchange + write +
     per-partition-dir task commits for bytes that already exist in
     exactly the target layout (on a lake this is a table-format shallow
-    clone / snapshot branch, the same metadata-only operation)."""
+    clone / snapshot branch, the same metadata-only operation).
+
+    A non-empty `dst_dir` raises `FileExistsError` before anything is
+    linked: a retried or partial clone would otherwise fail partway
+    through, or mix stale files in with the fresh links."""
+    if os.path.isdir(dst_dir) and os.listdir(dst_dir):
+        raise FileExistsError(f"clone destination is not empty: {dst_dir}")
     recover(src_dir)
     os.makedirs(dst_dir, exist_ok=True)
     skip = {JOURNAL_NAME, f".{JOURNAL_NAME}.tmp", STAGING_NAME}

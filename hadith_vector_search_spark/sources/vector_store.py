@@ -1225,11 +1225,8 @@ class PublishedVectorIndex:
             q = np.asarray(qvec, dtype=np.float64)
             cmap = {int(c): np.asarray(v, dtype=np.float64)
                     for c, v in self.centroids}
-            cell_term = F.element_at(
-                F.map_from_arrays(
-                    F.array(*[F.lit(int(p)) for p in probes]),
-                    F.array(*[F.lit(float(cmap[int(p)] @ q))
-                              for p in probes])),
+            cell_term = similarity.probe_cell_dots(
+                probes, [cmap[int(p)] @ q for p in probes],
                 F.col("cell").cast("int"))
         cands = (self.codes
                  .filter(F.col("cell").isin([int(p) for p in probes]))

@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadith_vector_search_spark.sources import commit as commitlog
@@ -121,3 +122,26 @@ def test_refresh_on_clone_never_touches_source(spark, tmp_path):
     assert got == _sig_rows(spark, ref)
     ids = {r[0] for r in got}
     assert 7 not in ids and 30 in ids
+
+
+def test_clone_refuses_non_empty_destination(tmp_path):
+    """A retried or partial clone must not link into a destination that
+    already holds files: it raises before any link, leaving both trees as
+    they were. An existing but empty destination is still accepted."""
+    src = tmp_path / "src"
+    (src / "part=0").mkdir(parents=True)
+    (src / "part=0" / "a.parquet").write_bytes(b"a")
+    (src / "manifest.json").write_text("{}")
+    dst = tmp_path / "dst"
+    dst.mkdir()
+    (dst / "stale.parquet").write_bytes(b"old")
+    before = _file_states(str(src))
+    with pytest.raises(FileExistsError):
+        commitlog.clone_store(str(src), str(dst))
+    assert sorted(os.listdir(dst)) == ["stale.parquet"]
+    assert _file_states(str(src)) == before
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    commitlog.clone_store(str(src), str(empty))
+    assert (empty / "part=0" / "a.parquet").read_bytes() == b"a"
+    assert (empty / "manifest.json").read_text() == "{}"

@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import math
+import random
+import struct
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,6 +42,119 @@ def test_l2_normalize(spark):
     df = spark.createDataFrame([([3.0, 4.0],)], "a array<double>")
     out = df.select(V.l2_normalize("a").alias("n")).collect()[0].n
     assert out == [0.6, 0.8]
+
+
+def _per_element_lit(vec):
+    """The per-element literal form `vector_lit` replaced (one `F.lit`
+    per element), kept here as the reference for bit identity."""
+    return F.array(*[F.lit(float(x)) for x in vec])
+
+
+def _bits(xs):
+    return [struct.pack("<d", x) for x in xs]
+
+
+_EDGE = [0.0, -0.0, 5e-324, -5e-324, 1e-05, 1e16, 1.7976931348623157e308,
+         float(np.float32(0.1)), float(np.float32(-3.3)), 1 / 3]
+
+
+def test_vector_lit_bit_identical_to_per_element_literals(spark):
+    """The SQL-text literal holds every element bit for bit, and scores
+    through `dot` exactly as the per-element form did: signed zeros,
+    subnormals, float32-widened values, NaN, ±inf and a random 384-dim
+    vector."""
+    rnd = random.Random(7)
+    vecs = [_EDGE, _EDGE + [math.nan, math.inf, -math.inf],
+            [rnd.gauss(0, 1) for _ in range(384)]]
+    rows = [(i, [float(np.float32(rnd.gauss(0, 1))) for _ in v])
+            for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "i int, a array<float>")
+    for i, vec in enumerate(vecs):
+        got = (df.filter(F.col("i") == i)
+               .select(V.vector_lit(vec).alias("new"),
+                       _per_element_lit(vec).alias("old"),
+                       V.dot("a", V.vector_lit(vec)).alias("dnew"),
+                       V.dot("a", _per_element_lit(vec)).alias("dold"))
+               .first())
+        assert _bits(got.new) == _bits(got.old) == _bits(vec)
+        assert _bits([got.dnew]) == _bits([got.dold])
+    assert V.double_sql(-0.0) == "-0E-1D"
+    assert V.double_sql(math.nan) == "CAST('NaN' AS DOUBLE)"
+
+
+def _column_cell_structs(centroids, vec_col):
+    return F.array(*[
+        F.struct(F.round(V.dot(F.col(vec_col), _per_element_lit(c)), 6)
+                 .alias("cd"), F.lit(-cid).alias("ncid"))
+        for cid, c in centroids])
+
+
+def _column_sign_bucket(planes, vec_col):
+    return F.concat(*[
+        F.when(V.dot(F.col(vec_col), _per_element_lit(v)) >= 0, F.lit("1"))
+        .otherwise(F.lit("0")) for _, v in planes])
+
+
+@pytest.mark.parametrize("n_cents", [8, 64])
+def test_codebook_expressions_equal_column_built_form(spark, n_cents):
+    """`cell_structs`/`cell_of` and `sign_bucket_expr` (one SQL
+    expression each) equal the Column-built arithmetic row for row,
+    including centroid ties (lowest id wins) and a vector column whose
+    name holds a space and a backtick."""
+    dim = 16
+    rnd = random.Random(n_cents)
+    cents = [(i, [rnd.gauss(0, 1) for _ in range(dim)])
+             for i in range(n_cents)]
+    cents[-1] = (n_cents - 1, list(cents[0][1]))  # tie with cell 0
+    rows = [(i, [float(np.float32(rnd.gauss(0, 1))) for _ in range(dim)])
+            for i in range(200)]
+    rows += [(200 + j, cents[j][1]) for j in range(3)]
+    odd = "my `vec"
+    df = (spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+          .withColumn(odd, F.col("embedding")))
+    planes = [(p, cents[p][1]) for p in range(6)]
+    new = [similarity.cell_of(cents, odd).alias("cell"),
+           similarity.cell_structs(cents, odd).alias("structs"),
+           similarity.sign_bucket_expr(planes, odd).alias("bucket")]
+    old_structs = _column_cell_structs(cents, "embedding")
+    old = [(-F.array_max(old_structs)["ncid"]).cast("int").alias("cell"),
+           old_structs.alias("structs"),
+           _column_sign_bucket(planes, "embedding").alias("bucket")]
+    got = df.select("vec_id", *new).orderBy("vec_id")
+    want = df.select("vec_id", *old).orderBy("vec_id")
+    assert got.schema == want.schema
+    rows = got.collect()
+    assert rows == want.collect()
+    assert 1 < len({r.cell for r in rows}) <= n_cents - 1
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Round trips through the session's gateway client."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    count = {"n": 0}
+
+    def send_command(*args, **kwargs):
+        count["n"] += 1
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", send_command)
+    return count
+
+
+def test_literal_builders_py4j_budget(py4j_calls):
+    """A 384-dim literal and an 8 x 384 cell assignment each cost a
+    handful of py4j round trips (~2,000 and ~16,000 per element-wise)."""
+    rnd = random.Random(5)
+    vec = [rnd.gauss(0, 1) for _ in range(384)]
+    cents = [(i, [rnd.gauss(0, 1) for _ in range(384)]) for i in range(8)]
+    py4j_calls["n"] = 0
+    V.vector_lit(vec)
+    assert py4j_calls["n"] <= 5
+    py4j_calls["n"] = 0
+    similarity.cell_of(cents)
+    assert py4j_calls["n"] <= 10
 
 
 def test_topk_by_query_id(emb):
